@@ -3,15 +3,14 @@
 The documents mimic the repo's synthetic `documents` table: a 31-word
 vocabulary, 5 languages, 20 sources, 44-577 characters per text. They are
 generated from the seed, never read from outside the checkout. Each source
-becomes one Markdown file per replica:
+becomes one Markdown file:
 
-    # <source> part <r>
+    # <source> part 0
     ## <lang> doc <id>
     <text>
 
-Replica 0 keeps the generated word order; replicas 1.. shuffle the words of
-every document with their own seeded generator. `fixtures/docs` is copied
-in beside the rendered files, as the product must index it too.
+`fixtures/docs` is copied in beside the rendered files, as the product must
+index it too.
 """
 
 from __future__ import annotations
@@ -42,35 +41,27 @@ def documents(seed: int, n: int = DOCS_PER_CORPUS) -> list[tuple[int, str, str, 
     return rows
 
 
-def render(out_dir: str, seed: int, replicas: int, fixtures_dir: str | None) -> dict:
+def render(out_dir: str, seed: int, fixtures_dir: str) -> dict:
     """Write the corpus under out_dir; returns its size facts."""
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
     docs = documents(seed)
+    by_src: dict[str, list[str]] = {}
+    for doc_id, src, lang, text in docs:
+        by_src.setdefault(src, []).append(f"## {lang} doc {doc_id}\n\n{text}\n")
     n_bytes = n_files = 0
-    for r in range(replicas):
-        rng = random.Random(seed * 1000 + r)
-        by_src: dict[str, list[str]] = {}
-        for doc_id, src, lang, text in docs:
-            words = text.split()
-            if r:
-                rng.shuffle(words)
-            by_src.setdefault(src, []).append(
-                f"## {lang} doc {doc_id}\n\n{' '.join(words)}\n"
-            )
-        for src, sections in sorted(by_src.items()):
-            body = f"# {src} part {r}\n\n" + "\n".join(sections)
-            path = os.path.join(out_dir, f"{src}_part{r}.md")
-            with open(path, "w", encoding="utf-8") as f:
-                f.write(body)
-            n_bytes += len(body.encode("utf-8"))
-            n_files += 1
-    if fixtures_dir:
-        dst = os.path.join(out_dir, "fixtures")
-        shutil.copytree(fixtures_dir, dst)
-        for root, _, files in os.walk(dst):
-            for name in files:
-                if name.endswith(".md"):
-                    n_bytes += os.path.getsize(os.path.join(root, name))
-                    n_files += 1
-    return {"input_bytes": n_bytes, "files": n_files, "docs": len(docs) * replicas}
+    for src, sections in sorted(by_src.items()):
+        body = f"# {src} part 0\n\n" + "\n".join(sections)
+        with open(os.path.join(out_dir, f"{src}_part0.md"), "w",
+                  encoding="utf-8") as f:
+            f.write(body)
+        n_bytes += len(body.encode("utf-8"))
+        n_files += 1
+    dst = os.path.join(out_dir, "fixtures")
+    shutil.copytree(fixtures_dir, dst)
+    for root, _, files in os.walk(dst):
+        for name in files:
+            if name.endswith(".md"):
+                n_bytes += os.path.getsize(os.path.join(root, name))
+                n_files += 1
+    return {"input_bytes": n_bytes, "files": n_files, "docs": len(docs)}

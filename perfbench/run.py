@@ -3,14 +3,19 @@
 Each run renders the seeded 1x corpus (corpus.py), builds its index with
 `index.builder.index_directories` (what `cli index` runs) in a fresh
 Spark session, opens a `DocSearchEngine` on it and measures one serving
-workload for --seconds:
+workload for about --seconds:
 
   serve_mcp     the MCP streamable-HTTP server that `cli serve --transport
                 streamable-http` runs (`server.make_search_tool` behind
                 `mcp_http.serve_http`) on a localhost port, driven by a
                 closed loop of 2 MCP sessions;
-  search_batch  `DocSearchEngine.search_batch` over batches of 32
+  search_batch  `DocSearchEngine.search_batch` over batches of
                 distinct queries.
+
+Both warm up and time a number of calls, not a span of time: the JVM keeps
+speeding calls up for tens of them, so a count puts every host's timed
+phase on the same calls of that curve. The timed count is set from
+--seconds and the call time on a 4-vCPU host.
 
 The index and every served result are then checked against DuckDB
 (checks.py). With --trace 1 the same workload runs traced and layers.py
@@ -47,15 +52,19 @@ def log(msg: str) -> None:
 
 WORKLOADS = ("serve_mcp", "search_batch")
 TOP_K = 5
-BATCH_SIZE = 32
-WARMUP_BATCH = 8
-SERVE_WARMUP_S = 10.0
-N_BATCHES = 12  # warm-up + more timed batches than any run uses
-STREAM_LEN = 5000  # more MCP queries than any run sends
+BATCH_SIZE = 16
+# a fresh engine's first batch call takes 2-3 times a warm one, the second
+# 1.2 times; later ones stay within the host's noise
+WARMUP_BATCHES = 2
+BATCH_CALL_S = 3.5  # a warm call on a 4-vCPU host
+# MCP round trips in a fresh server (2 sessions) get faster for about 100
+# requests: steeply over the first ~20, then by ~0.5% a request
+SERVE_WARMUP_REQUESTS = 20
+SERVE_REQUESTS_PER_S = 2.2  # the closed loop after warm-up, 4-vCPU host
 MCP_SESSIONS = 2
 TOOL = "search_documents"
 # the end-to-end metrics, printed by every untraced run
-UNITS = {"setup_s": "s", "index_chunks_per_s": "1/s",
+UNITS = {"setup_s": "s",
          "index_bytes_per_input_byte": "B/B", "call_p50_ms": "ms",
          "queries_per_s": "1/s", "serving_rss_mb": "MB"}
 
@@ -137,7 +146,7 @@ class Product:
         self.t0 = time.perf_counter()
         self.corpus_dir = os.path.join(work, "corpus")
         self.index_dir = os.path.join(work, "index")
-        self.corpus = corpus.render(self.corpus_dir, seed, 1,
+        self.corpus = corpus.render(self.corpus_dir, seed,
                                     os.path.join(root, "fixtures", "docs"))
         log("corpus rendered")
         t = time.perf_counter()
@@ -196,7 +205,6 @@ class Product:
 
     def metrics(self) -> dict[str, float]:
         return {
-            "index_chunks_per_s": self.counts["documents"] / self.build_s,
             "index_bytes_per_input_byte":
                 sum(self.index_bytes.values()) / self.corpus["input_bytes"],
         }
@@ -204,27 +212,26 @@ class Product:
 
 # --- workloads: each returns the timed samples -------------------------------
 
-def mcp_loop(port: int, stream: list[tuple[str, str]],
-             seconds: float) -> list[dict]:
+def mcp_loop(port: int, stream: list[tuple[str, str]]) -> list[dict]:
     """Closed loop of MCP_SESSIONS sessions: each sends its next query when
-    the previous reply arrives, until `seconds` have passed. Queries are
-    taken from `stream` in order, shared by the sessions."""
-    from mcp_client import McpError, McpSession
+    the previous reply arrives, until `stream` is used up. Queries are
+    taken from `stream` in order, shared by the sessions. A call that fails
+    in any way is kept as a sample with its error."""
+    from mcp_client import McpSession
 
     lock = threading.Lock()
     pos = iter(range(len(stream)))
     samples: list[dict] = []
-    deadline = time.perf_counter() + seconds
     errors: list[BaseException] = []
 
     def client():
         try:
             s = McpSession(port)
-        except (OSError, McpError) as e:
+        except Exception as e:  # noqa: BLE001 - re-raised below
             errors.append(e)
             return
         try:
-            while time.perf_counter() < deadline:
+            while True:
                 with lock:
                     i = next(pos, None)
                 if i is None:
@@ -234,8 +241,8 @@ def mcp_loop(port: int, stream: list[tuple[str, str]],
                 t = time.perf_counter()
                 try:
                     rec["results"] = s.search(TOOL, q, TOP_K)
-                except (OSError, McpError) as e:
-                    rec["error"] = str(e)
+                except Exception as e:  # noqa: BLE001 - counted as failed
+                    rec["error"] = f"{type(e).__name__}: {e}"
                 rec["start"], rec["end"] = t, time.perf_counter()
                 with lock:
                     samples.append(rec)
@@ -252,18 +259,32 @@ def mcp_loop(port: int, stream: list[tuple[str, str]],
     return sorted(samples, key=lambda r: r["i"])
 
 
-def batch_loop(engine, batches, seconds: float, span=None,
-               alternate: bool = False) -> list[dict]:
-    """Run batches back to back until `seconds` have passed (at least one
-    batch). With `span`, batches run inside a span: every batch, or every
-    second one when `alternate`."""
+def timed_batch_calls(seconds: float) -> int:
+    """Batch calls in the timed phase: at least 3, for a median."""
+    return max(3, round(seconds / BATCH_CALL_S))
+
+
+def timed_requests(seed: int, seconds: float) -> list[tuple[str, str]]:
+    """The MCP queries of the timed phase, about --seconds' worth."""
+    import streams
+
+    # whole cycles of the stream's class sequence, so every run sends the
+    # same mix
+    cycle = len(streams.MCP_CYCLE)
+    n = cycle * max(1, round(seconds * SERVE_REQUESTS_PER_S / cycle))
+    return streams.mcp_stream(seed, n)
+
+
+def batch_loop(engine, batches, span=None, alternate: bool = False
+               ) -> list[dict]:
+    """Run every batch, back to back. With `span`, batches run inside a
+    span: every batch, or when `alternate` the middle two of each four
+    (untraced, traced, traced, untraced), which cancels a steady drift."""
     samples = []
-    deadline = time.perf_counter() + seconds
     for b in batches:
-        if samples and time.perf_counter() >= deadline:
-            break
         queries = [q for _, q in b]
-        traced = span is not None and (not alternate or len(samples) % 2)
+        traced = span is not None and (not alternate
+                                       or len(samples) % 4 in (1, 2))
         t = time.perf_counter()
         if traced:
             with span("doc_engine.search_batch", rest=True):
@@ -272,32 +293,32 @@ def batch_loop(engine, batches, seconds: float, span=None,
             results = engine.search_batch(queries, top_k=TOP_K)
         samples.append({"batch": b, "results": results, "traced": traced,
                         "start": t, "end": time.perf_counter()})
-    if len(samples) == len(batches):
-        raise RuntimeError("query batches ran out before the deadline")
     return samples
 
 
-def serve_setup(product: Product, seed: int, tool_fn=None) -> int:
-    """Start the MCP server and warm it: the closed loop runs for
-    SERVE_WARMUP_S on its own query stream first, as the JVM keeps
-    compiling the per-request planning path for tens of requests.
-    Returns the port."""
+def warm_server(port: int, seed: int) -> None:
+    """Warm the MCP server with SERVE_WARMUP_REQUESTS calls from a query
+    stream of its own, as the JVM keeps compiling the per-request planning
+    path for tens of requests. A count, not a time, so that the timed
+    phase starts at the same point of that curve on any host."""
     import streams
 
-    port = product.start_server(tool_fn)
-    mcp_loop(port, streams.mcp_stream(seed + 1, STREAM_LEN), SERVE_WARMUP_S)
-    return port
+    warm = streams.mcp_stream(seed + 1, SERVE_WARMUP_REQUESTS)
+    failed = [r for r in mcp_loop(port, warm) if r["error"] is not None]
+    if failed:
+        raise RuntimeError(f"MCP warm-up call failed: {failed[0]['error']}")
 
 
-def batch_setup(product: Product, seed: int) -> list:
-    """Run a small warm-up batch, which compiles the batch plans; returns
-    the batches for the timed phase."""
+def batch_setup(product: Product, seed: int, n_timed: int,
+                n_warm: int = WARMUP_BATCHES) -> list:
+    """Run n_warm full batches, which compile the batch plans and let the
+    JVM level off; returns the n_timed batches for the timed phase."""
     import streams
 
-    warm, *timed = streams.batches(seed, N_BATCHES, BATCH_SIZE)
-    product.engine.search_batch([q for _, q in warm[:WARMUP_BATCH]],
-                                top_k=TOP_K)
-    return timed
+    all_batches = streams.batches(seed, n_warm + n_timed, BATCH_SIZE)
+    for b in all_batches[:n_warm]:
+        product.engine.search_batch([q for _, q in b], top_k=TOP_K)
+    return all_batches[n_warm:]
 
 
 def serve_samples_metrics(samples: list[dict]) -> dict[str, float]:
@@ -325,8 +346,9 @@ def check_samples(oracle, workload: str, samples: list[dict]) -> list[str]:
     return oracle.check_all(items, TOP_K)
 
 
-def check_outputs(product: Product, workload: str, samples: list[dict]):
-    """DuckDB checks; returns (attempted, failures)."""
+def check_outputs(product: Product, runs: list[tuple[str, list[dict]]]):
+    """DuckDB checks of the index and of every (workload, samples) run;
+    returns (attempted, failures)."""
     import checks
 
     con = checks.connect(product.index_dir)
@@ -334,12 +356,25 @@ def check_outputs(product: Product, workload: str, samples: list[dict]):
         fails = checks.check_index(con)
         oracle = checks.SearchOracle(con, product.engine.meta.get(
             "tokenizer", "jp_heuristic"))
-        fails += check_samples(oracle, workload, samples)
+        for workload, samples in runs:
+            fails += check_samples(oracle, workload, samples)
     finally:
         con.close()
-    n_ops = len(samples) if workload == "serve_mcp" else \
-        BATCH_SIZE * len(samples)
+    n_ops = sum(len(s) if w == "serve_mcp" else BATCH_SIZE * len(s)
+                for w, s in runs)
     return 1 + n_ops, fails  # 1: the index build
+
+
+def result(attempted: int, fails: list[str], metrics: dict[str, float],
+           unit_of) -> dict:
+    """The benchmark's result object; reports the first failures on
+    stderr."""
+    for f in fails[:20]:
+        print(f"perfbench: FAILED {f}", file=sys.stderr)
+    return {"correct": not fails, "attempted": attempted,
+            "failed": len(fails),
+            "metrics": {k: {"value": float(v), "unit": unit_of(k)}
+                        for k, v in sorted(metrics.items())}}
 
 
 def run_workload(product: Product, workload: str, seed: int,
@@ -349,18 +384,18 @@ def run_workload(product: Product, workload: str, seed: int,
     import streams
 
     if workload == "serve_mcp":
-        port = serve_setup(product, seed)
+        port = product.start_server()
+        warm_server(port, seed)
         setup_s = time.perf_counter() - product.t0
         log("server warm")
-        samples = mcp_loop(port, streams.mcp_stream(seed, STREAM_LEN),
-                           seconds)
+        samples = mcp_loop(port, timed_requests(seed, seconds))
         out = serve_samples_metrics(samples)
         classes = [r["cls"] for r in samples]
     else:
-        timed = batch_setup(product, seed)
+        timed = batch_setup(product, seed, timed_batch_calls(seconds))
         setup_s = time.perf_counter() - product.t0
         log("batch warm")
-        samples = batch_loop(product.engine, timed, seconds)
+        samples = batch_loop(product.engine, timed)
         out = batch_samples_metrics(samples)
         classes = [c for r in samples for c, _ in r["batch"]]
     out.update(setup_s=setup_s, serving_rss_mb=peak_rss_mb())
@@ -374,18 +409,14 @@ def run(args, root: str, work: str) -> dict:
     try:
         res = run_workload(product, args.workload, args.seed, args.seconds)
         metrics = {**res["metrics"], **product.metrics()}
-        attempted, fails = check_outputs(product, args.workload,
-                                         res["samples"])
+        attempted, fails = check_outputs(
+            product, [(args.workload, res["samples"])])
         log("outputs checked")
     finally:
         product.close()
         log("session stopped")
-    for f in fails[:20]:
-        print(f"perfbench: FAILED {f}", file=sys.stderr)
-    return {"correct": not fails, "attempted": attempted,
-            "failed": len(fails),
-            "metrics": {k: {"value": metrics[k], "unit": u}
-                        for k, u in UNITS.items()}}
+    return result(attempted, fails, {k: metrics[k] for k in UNITS},
+                  UNITS.get)
 
 
 def main(argv=None) -> int:

@@ -1,10 +1,12 @@
 """Which top-k scan sites and dedup cell-pair bodies a workload reaches.
 
-Runs one untraced workload (run.py) under a profile hook that records every
-function of the package entered on the driver, then reports, per site,
-whether the driver function that owns it was entered. A site's body runs
-on executors only inside the plan that function builds, so a function
-never entered means its site never ran.
+Runs one workload (run.py, traced or not) under a profile hook that
+records every function of the package entered on the driver, then reports,
+per site, whether the driver function that owns it was entered. A site's
+body runs on executors only inside the plan that function builds, so a
+function never entered means its site never ran. `cell_pairs` and
+`cell_stats` are nested functions that run only in Python workers, so
+their enclosing driver functions stand for them.
 
 Sites: the nine copies of the top-k scan body (operators/knn.py,
 index/ivf_layout.py, search/engine.py) and the three pair-GEMM bodies of
@@ -12,7 +14,7 @@ operators/dedup.py.
 
 Run from the repository root:
 
-    python3 perfbench/sites.py --workload serve_mcp --seed 1 --seconds 10
+    python3 perfbench/sites.py --workload serve_mcp --seed 1 --seconds 10 --trace 1
 """
 
 from __future__ import annotations
@@ -28,8 +30,10 @@ SITES = {
                          "ivfpq_residual_topk", "hard_negatives"),
     "index/ivf_layout.py": ("ivf_frozen_layout_topk",),
     "search/engine.py": ("hybrid_search_batch",),
-    "operators/dedup.py": ("_embedding_pairs_gemm", "cell_pairs",
-                           "cell_stats"),
+    # _embedding_pairs_gemm, and the functions around cell_pairs and
+    # cell_stats
+    "operators/dedup.py": ("_embedding_pairs_gemm", "dedup_embedding_ivf",
+                           "_semdedup_with_centroids"),
 }
 
 

@@ -48,14 +48,15 @@ class Span:
 
 
 class Tracer:
-    def __init__(self, spark, rest: bool = False):
+    def __init__(self, spark):
         self.sc = spark.sparkContext
         self.spans: list[Span] = []
         self._ids = itertools.count()
         self._lock = threading.Lock()
         self._local = threading.local()
+        # the REST API exists only when the UI runs (SPARK_GRAFT_UI=true)
         self.rest_base = None
-        if rest and self.sc.uiWebUrl:
+        if self.sc.uiWebUrl:
             self.rest_base = (f"{self.sc.uiWebUrl}/api/v1/applications/"
                               f"{self.sc.applicationId}")
 
