@@ -18,7 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import DEDUP_IVF_NPROBE
-from ..operators.knn import NPROBE, centroid_pred, derive_nlist, ivf_assign
+from ..operators.knn import (NPROBE, as_matrix, centroid_pred,
+                             collect_centroids, collect_queries,
+                             derive_nlist, ivf_assign, local_topk_scan,
+                             probe_cells_per_query, rounded_cosine)
 
 # Encode-semantics version token in the cache key (see ivfpq_layout).
 LAYOUT_FORMAT = "v3"  # v3: nlist derived from corpus count at build
@@ -492,95 +495,35 @@ def ivf_frozen_layout_topk(spark: SparkSession, out_dir: str,
     Candidates come from the partition-PRUNED cell scan: cost is
     nprobe/nlist of the layout by construction.
 
-    r14: probe selection moves to the driver (the frozen centroid side
-    table is the bounded set the old plan broadcast; per query the top-
-    NPROBE cells by rounded cosine desc / cent_id asc — the old window
-    ordering via stable argsort over cid-sorted centroids) and the
-    pruned cell scan is scored by ONE Arrow-GEMM pass instead of the
-    probes join + interpreted HOF cosine per (query, candidate) + a
-    window over every scored pair: each batch scores the queries whose
-    probe set contains a row's cell and emits its LOCAL top-k per query
-    by the exact global ordering — a superset of the global top-k,
-    ranked by the unchanged final window. Partition pruning is
-    untouched (the scan still reads only the probed cells)."""
+    Probe selection runs on the driver (probe_cells_per_query over the
+    frozen centroid side table, a bounded set), and the pruned cell scan
+    is one local_topk_scan keeping, per query, the rows of its probe
+    cells. Partition pruning is untouched: the scan reads only the
+    probed cells."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
 
-    from ..config import SCORE_ROUND
-
-    cent_rows = sorted(
-        read_layout_centroids(spark, out_dir).collect(),
-        key=lambda r: r["cent_id"],
-    )
-    qrows = sorted(queries.collect(), key=lambda r: r["q_id"])
-    out_schema = T.StructType([
-        T.StructField("q_id", queries.schema["q_id"].dataType),
-        T.StructField("c_id", T.LongType()),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    if not qrows or not cent_rows:
-        scored = spark.createDataFrame([], out_schema)
+    C, cids = collect_centroids(read_layout_centroids(spark, out_dir))
+    schema, qpdf = collect_queries(queries.select("q_id", "q_vec"))
+    pcells = np.empty((0, 0), dtype=np.int64)
+    if len(cids) and len(qpdf):
+        pcells = probe_cells_per_query(as_matrix(qpdf["q_vec"]), C, cids,
+                                       NPROBE)
     else:
-        CC = np.array([[float(x) for x in r["cvec"]] for r in cent_rows],
-                      dtype=np.float64)
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
-        ccn = np.sqrt((CC * CC).sum(axis=1))
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r["q_id"] for r in qrows])
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
-        qsims = np.round(
-            (Qm @ CC.T) / (qnorm[:, None] * ccn[None, :]), SCORE_ROUND
-        )
-        take = min(NPROBE, len(cc_ids))
-        pidx = np.argsort(-qsims, axis=1, kind="stable")[:, :take]
-        probe_sets = [set(cc_ids[pidx[j]].tolist())
-                      for j in range(len(q_ids))]
-        probe_cell_ids = sorted(set().union(*probe_sets))
+        qpdf = qpdf.iloc[:0]  # no centroid: no query has a probe cell
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                c_ids = pdf["vec_id"].to_numpy()
-                cells = pdf["cell"].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(
-                        np.isin(cells, list(probe_sets[j])))
-                    order = np.lexsort(
-                        (c_ids[keep], -sims[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "cos_sim": sims[ci, qi],
-                })
+    def scorer(Q, qpdf):
+        def score_batch(X, pdf):
+            cells = pdf["cell"].to_numpy()
+            keep = (cells[:, None, None] == pcells[None, :, :]).any(axis=2)
+            return rounded_cosine(X, Q), keep
 
-        scored = (
-            probe_cells(spark, out_dir, probe_cell_ids)
-            .select("vec_id", "embedding", "cell")
-            .mapInPandas(fn, out_schema)
-        )
-    wk = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-    )
+        return score_batch
+
+    corpus = probe_cells(spark, out_dir, sorted(set(pcells.ravel().tolist())))
+    return local_topk_scan(
+        corpus.select(F.col("vec_id").alias("c_id"), "embedding", "cell"),
+        "c_id", "embedding", (schema, qpdf), scorer, k, ascending=False,
+        score_col="cos_sim", op="ivf_frozen_layout_topk").drop("cell")
 
 
 # append-probe split rule: ~20% of non-centroid ids arrive via append

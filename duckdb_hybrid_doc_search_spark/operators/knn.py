@@ -41,76 +41,170 @@ def cosine_distance_topk(embeddings: DataFrame, query_vec: Sequence[float],
     )
 
 
-def knn_join(queries: DataFrame, corpus: DataFrame, k: int,
-             q_id: str = "q_id", q_vec: str = "q_vec",
-             c_id: str = "c_id", c_vec: str = "c_vec") -> DataFrame:
-    """Brute-force top-k neighbors per query row (higher similarity first).
+# Most query rows one top-k scan takes. Every Arrow batch of the corpus
+# (spark.sql.execution.arrow.maxRecordsPerBatch = 4096 rows, session.py)
+# holds a float64 score block of 4096 x Q x 8 bytes in its Python worker:
+# 4096 queries make that 128 MiB (256 MiB for matryoshka_recall's two
+# blocks), next to the batch itself and its Q x k local candidates.
+MAX_SCAN_QUERIES = 4096
 
-    The queries side is bounded by contract — at scale it is a batch of
-    probe vectors (the pre-r14 form broadcast it); the corpus streams.
-    Output: q_id, c_id, cos_sim, rank.
 
-    r14: the N x Q pair materialization (crossJoin + interpreted HOF
-    cosine per pair + a row_number window over ALL pairs) is replaced by
-    one Arrow-GEMM pass with the bounded query set collected to the
-    driver (the same rows the broadcast shipped): each scan batch
-    computes its sims block, rounds at SCORE_ROUND (np.round — the
-    pinned assign_to_centroids / knn_classify convention, verified
-    value-identical to the rounded HOF fold across every oracle) and
-    emits only its LOCAL top-k per query by the exact global ordering
-    (rounded sim desc, c_id asc) — a superset of the global top-k, so
-    the unchanged final window selects identical rows. The window now
-    sorts Q x k x n_batches candidate rows instead of N x Q.
-    """
+def as_matrix(vectors):
+    """float64 [n, dim] matrix of a pandas Series of vectors (an Arrow
+    list column of a scan batch, or a collected query side)."""
+    import numpy as np
+
+    return np.array(vectors.tolist(), dtype=np.float64)
+
+
+def rounded_cosine(X, Q, qnorm=None):
+    """[n, q] cosine of every row of X with every row of Q, rounded at
+    SCORE_ROUND — the GEMM form of the oracles' round(cosine, SCORE_ROUND),
+    value-identical to it. ``qnorm`` is Q's row norms, if precomputed."""
+    import numpy as np
+
+    if qnorm is None:
+        qnorm = np.sqrt((Q * Q).sum(axis=1))
+    return np.round(
+        (X @ Q.T) / (np.sqrt((X * X).sum(axis=1))[:, None] * qnorm[None, :]),
+        SCORE_ROUND,
+    )
+
+
+def probe_cells_per_query(Q, C, cent_ids, nprobe: int):
+    """[q, min(nprobe, n_cent)] ids of each query's probe cells: the top
+    ``nprobe`` centroids by (rounded cosine desc, cent_id asc) — the
+    oracle window's ordering, by a stable argsort over the cid-sorted
+    centroid matrix ``C``."""
+    import numpy as np
+
+    take = min(nprobe, len(cent_ids))
+    order = np.argsort(-rounded_cosine(Q, C), axis=1, kind="stable")
+    return cent_ids[order[:, :take]]
+
+
+def collect_centroids(cent: DataFrame) -> tuple:
+    """(C, cent_ids) of a bounded (cent_id, cvec) centroid table on the
+    driver, sorted by cent_id so first-max argmax ties to the lower id."""
+    import numpy as np
+
+    rows = sorted(cent.select("cent_id", "cvec").collect(),
+                  key=lambda r: r["cent_id"])
+    C = np.array([[float(x) for x in r["cvec"]] for r in rows],
+                 dtype=np.float64)
+    return C, np.array([int(r["cent_id"]) for r in rows], dtype=np.int64)
+
+
+def collect_queries(queries: DataFrame) -> tuple:
+    """The query side of a top-k scan on the driver: ``queries``' schema
+    and a pandas frame of its (id, vector, *payload) rows sorted by id.
+    At most MAX_SCAN_QUERIES + 1 rows are fetched, so local_topk_scan
+    can refuse an oversized side without collecting all of it."""
+    import pandas as pd
+
+    rows = queries.limit(MAX_SCAN_QUERIES + 1).collect()
+    rows.sort(key=lambda r: r[0])
+    return queries.schema, pd.DataFrame.from_records(
+        [tuple(r) for r in rows], columns=queries.columns)
+
+
+def local_topk_scan(corpus: DataFrame, id_col: str, vec_col: str,
+                    queries: tuple, scorer, k: int, ascending: bool,
+                    score_col: str, op: str) -> DataFrame:
+    """Top-k corpus rows per query by (score, ``id_col`` asc) in one
+    Arrow-GEMM pass over ``corpus`` plus one window — the scan behind
+    the exact kNN, PQ / IVF-PQ, IVF-layout and hybrid-batch top-k
+    operators.
+
+    ``queries`` is (schema, frame) as collect_queries returns it: columns
+    (id, vector, *payload), at most MAX_SCAN_QUERIES rows (more raise
+    ValueError naming ``op``). ``scorer(Q, qpdf)`` sees the query matrix
+    and frame once on the driver and returns ``score_batch(X, pdf) ->
+    (scores[n, q], keep[n, q] | None)`` for one scan batch: its vectors
+    ``X`` and its pandas frame. Only kept pairs are candidates.
+
+    Each batch emits its LOCAL top-k per query by the exact global
+    ordering (score, id asc), by a lexsort so ties fall to the
+    lower id. The global top-k is a subset of the union of the local
+    ones, so the final row_number window over (score, id) per query id
+    ranks Q x k x n_batches candidates and selects exactly the rows a
+    window over all N x Q pairs would.
+
+    ``corpus`` holds ``id_col``, ``vec_col`` and the payload columns to
+    carry. Output: query id and payload, ``id_col`` and the corpus
+    payload, ``score_col``, ``rank``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    out_schema = T.StructType([
-        T.StructField(q_id, queries.schema[q_id].dataType),
-        T.StructField(c_id, corpus.schema[c_id].dataType),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    qrows = sorted(queries.select(q_id, q_vec).collect(), key=lambda r: r[0])
-    if not qrows:
+    schema, qpdf = queries
+    if len(qpdf) > MAX_SCAN_QUERIES:
+        raise ValueError(
+            f"{op}: the query side has more than MAX_SCAN_QUERIES="
+            f"{MAX_SCAN_QUERIES} rows; split it into smaller batches")
+    q_id, q_vec, *q_cols = schema.names
+    c_cols = [c for c in corpus.columns if c not in (id_col, vec_col)]
+    out_schema = T.StructType(
+        [schema[c] for c in (q_id, *q_cols)]
+        + [corpus.schema[c] for c in (id_col, *c_cols)]
+        + [T.StructField(score_col, T.DoubleType())]
+    )
+    if not len(qpdf):
         pairs = corpus.sparkSession.createDataFrame([], out_schema)
     else:
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
+        score_batch = scorer(as_matrix(qpdf[q_vec]), qpdf)
+        q_out = {c: qpdf[c].to_numpy() for c in (q_id, *q_cols)}
 
         def fn(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = np.array(pdf[c_vec].tolist(), dtype=np.float64)
-                c_ids = pdf[c_id].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
+                scores, keep = score_batch(as_matrix(pdf[vec_col]), pdf)
+                ids = pdf[id_col].to_numpy()
+                key = scores if ascending else -scores
+                rows = np.arange(len(ids))
                 qi, ci = [], []
-                for j in range(len(q_ids)):
-                    order = np.lexsort((c_ids, -sims[:, j]))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(order)
+                for j in range(len(qpdf)):
+                    cand = rows if keep is None else rows[keep[:, j]]
+                    sel = cand[np.lexsort((ids[cand], key[cand, j]))[:k]]
+                    qi.append(np.full(len(sel), j, dtype=np.int64))
+                    ci.append(sel)
                 qi = np.concatenate(qi)
                 ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    q_id: q_ids[qi],
-                    c_id: c_ids[ci],
-                    "cos_sim": sims[ci, qi],
-                })
+                out = {c: v[qi] for c, v in q_out.items()}
+                out.update({c: pdf[c].to_numpy()[ci]
+                            for c in (id_col, *c_cols)})
+                out[score_col] = scores[ci, qi]
+                yield pd.DataFrame(out)
 
-        pairs = corpus.select(c_id, c_vec).mapInPandas(fn, out_schema)
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
+        pairs = corpus.mapInPandas(fn, out_schema)
+    order = F.asc(score_col) if ascending else F.desc(score_col)
+    w = Window.partitionBy(q_id).orderBy(order, F.asc(id_col))
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
+
+
+def cosine_scorer(Q, qpdf):
+    """The local_topk_scan scorer of plain cosine kNN: rounded cosine,
+    every pair kept."""
+    return lambda X, pdf: (rounded_cosine(X, Q), None)
+
+
+def knn_join(queries: DataFrame, corpus: DataFrame, k: int,
+             q_id: str = "q_id", q_vec: str = "q_vec",
+             c_id: str = "c_id", c_vec: str = "c_vec") -> DataFrame:
+    """Brute-force top-k neighbors per query row (higher similarity first).
+
+    The queries side is bounded by contract (a batch of probe vectors,
+    collected to the driver); the corpus streams once through
+    local_topk_scan. Output: q_id, c_id, cos_sim, rank.
+    """
+    return local_topk_scan(
+        corpus.select(c_id, c_vec), c_id, c_vec,
+        collect_queries(queries.select(q_id, q_vec)), cosine_scorer, k,
+        ascending=False, score_col="cos_sim", op="knn_join")
 
 
 CENTROID_MOD = 50   # deterministic centroid pick: vec_id % CENTROID_MOD == 0
@@ -212,11 +306,7 @@ def assign_to_centroids(vecs: DataFrame, cent: DataFrame,
     import numpy as np
     import pandas as pd
 
-    crows = sorted(cent.select("cent_id", "cvec").collect(),
-                   key=lambda r: r["cent_id"])
-    C = np.array([[float(x) for x in r["cvec"]] for r in crows],
-                 dtype=np.float64)
-    cids = np.array([int(r["cent_id"]) for r in crows], dtype=np.int64)
+    C, cids = collect_centroids(cent)
     cnorm = np.sqrt((C * C).sum(axis=1))
     take = min(p, len(cids))
 
@@ -224,12 +314,7 @@ def assign_to_centroids(vecs: DataFrame, cent: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
-            sims = np.round(
-                (X @ C.T)
-                / (np.sqrt((X * X).sum(axis=1))[:, None] * cnorm[None, :]),
-                SCORE_ROUND,
-            )
+            sims = rounded_cosine(as_matrix(pdf["c_vec"]), C, cnorm)
             if take == 1:
                 best = sims.argmax(axis=1)  # first max = lowest cent_id
                 out = {
@@ -497,79 +582,27 @@ def matryoshka_recall(emb: DataFrame, k: int, n_queries: int,
 
     Output: q_id, recall_at_k (one row per query, 0.0 when disjoint).
 
-    r14: the N x Q pair materialization (crossJoin + two interpreted HOF
-    cosines per pair + two row_number windows over ALL pairs) is
-    replaced by one Arrow-GEMM pass (the knn_join shape): each scan
-    batch scores both metrics and emits its LOCAL top-k per query under
-    EACH ordering (rounded sim desc, c_id asc — supersets of the global
-    top-k sets), the two small windows rank Q x k x n_batches candidate
-    rows, and recall@k = |top-k_full ∩ top-k_trunc| / k — identical to
-    counting pairs with rf <= k AND rt <= k.
+    One query collect feeds two local_topk_scan passes, full and
+    truncated, whose windows both partition by q_id, so the join of
+    the two top-k sets needs no exchange; recall@k = |top-k_full ∩
+    top-k_trunc| / k — identical to counting pairs with rf <= k AND
+    rt <= k.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     queries = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
-    out_schema = T.StructType([
-        T.StructField("q_id", emb.schema[id_col].dataType),
-        T.StructField("c_id", emb.schema[id_col].dataType),
-        T.StructField("sim", T.DoubleType()),
-        T.StructField("kind", T.StringType()),
-    ])
-    qrows = sorted(queries.collect(), key=lambda r: r["q_id"])
-    if not qrows:
-        cand = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r["q_id"] for r in qrows])
-        Qt = Qm[:, :dim]
-        qn_full = np.sqrt((Qm * Qm).sum(axis=1))
-        qn_trunc = np.sqrt((Qt * Qt).sum(axis=1))
-
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                Xt = X[:, :dim]
-                sims = {
-                    "f": np.round(
-                        (X @ Qm.T)
-                        / (np.sqrt((X * X).sum(axis=1))[:, None]
-                           * qn_full[None, :]), SCORE_ROUND),
-                    "t": np.round(
-                        (Xt @ Qt.T)
-                        / (np.sqrt((Xt * Xt).sum(axis=1))[:, None]
-                           * qn_trunc[None, :]), SCORE_ROUND),
-                }
-                for kind, sm in sims.items():
-                    qi, ci = [], []
-                    for j in range(len(q_ids)):
-                        order = np.lexsort((c_ids, -sm[:, j]))[:k]
-                        qi.append(np.full(len(order), j, dtype=np.int64))
-                        ci.append(order)
-                    qi = np.concatenate(qi)
-                    ci = np.concatenate(ci)
-                    yield pd.DataFrame({
-                        "q_id": q_ids[qi],
-                        "c_id": c_ids[ci],
-                        "sim": sm[ci, qi],
-                        "kind": kind,
-                    })
-
-        cand = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id"))
+    qside = collect_queries(queries)
+    scorers = {
+        "f": cosine_scorer,
+        "t": lambda Q, qpdf: lambda X, pdf: (
+            rounded_cosine(X[:, :dim], Q[:, :dim]), None),
+    }
     topk = {
-        kind: cand.where(F.col("kind") == kind)
-        .withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= k)
-        .select("q_id", "c_id")
-        for kind in ("f", "t")
+        kind: local_topk_scan(
+            emb.select(F.col(id_col).alias("c_id"), vec_col), "c_id",
+            vec_col, qside, scorer, k, ascending=False, score_col="sim",
+            op="matryoshka_recall").select("q_id", "c_id")
+        for kind, scorer in scorers.items()
     }
     hits = topk["f"].join(topk["t"], ["q_id", "c_id"]).groupBy("q_id").agg(
         F.count(F.lit(1)).alias("n_hit")
@@ -636,83 +669,29 @@ def knn_classify_accuracy(emb: DataFrame, k: int, n_queries: int,
     (self excluded; cosine ties broken by id, vote ties by smaller label)
     and scored against its true label.
 
-    Scale shape: the evaluation query set is the bounded broadcast side;
-    the corpus streams once; per-query state after the scan is k rows.
+    Scale shape: the evaluation query set is the bounded side, collected
+    to the driver; the corpus streams once; per-query state after the
+    scan is k rows.
 
-    r14: the N x Q pair materialization (crossJoin + interpreted HOF
-    cosine per pair + a row_number window over ALL pairs) is replaced by
-    one Arrow-GEMM pass with the bounded query set collected to the
-    driver (same rows the broadcast shipped): each scan batch computes
-    its sims block, rounds at SCORE_ROUND (np.round, the pinned
-    assign_to_centroids convention) and emits only its LOCAL top-k per
-    query by the exact global ordering (rounded sim desc, c_id asc) —
-    a superset of the global top-k, so the downstream window over
-    Q x k x n_batches candidate rows selects identical neighbors. The
-    vote and accuracy stages are unchanged.
+    The neighbors come from local_topk_scan with keep mask c_id != q_id.
 
     Output per true label: n, n_correct, accuracy.
     """
-    import numpy as np
-    import pandas as pd
+    queries = emb.where(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
+        F.col(label_col).alias("q_label"))
 
-    qrows = sorted(
-        emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-                F.col(label_col).alias("q_label"))
-        .collect(),
-        key=lambda r: r["q_id"],
-    )
-    cand_schema = "q_id long, q_label int, c_id long, c_label int, " \
-                  "cos_sim double"
-    if not qrows:
-        nn = emb.sparkSession.createDataFrame([], cand_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([int(r["q_id"]) for r in qrows], dtype=np.int64)
-        q_labels = np.array([int(r["q_label"]) for r in qrows],
-                            dtype=np.int32)
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
+    def scorer(Q, qpdf):
+        q_ids = qpdf["q_id"].to_numpy()
+        return lambda X, pdf: (
+            rounded_cosine(X, Q),
+            pdf["c_id"].to_numpy()[:, None] != q_ids[None, :])
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                c_labels = pdf[label_col].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(c_ids != q_ids[j])
-                    order = np.lexsort(
-                        (c_ids[keep], -sims[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "q_label": q_labels[qi],
-                    "c_id": c_ids[ci],
-                    "c_label": c_labels[ci],
-                    "cos_sim": sims[ci, qi],
-                })
-
-        nn = emb.select(id_col, vec_col, label_col).mapInPandas(
-            fn, cand_schema)
-    w_nn = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("c_id")
-    )
-    nn = nn.withColumn("rnk", F.row_number().over(w_nn)).where(
-        F.col("rnk") <= k
-    )
+    nn = local_topk_scan(
+        emb.select(F.col(id_col).alias("c_id"), vec_col,
+                   F.col(label_col).alias("c_label")),
+        "c_id", vec_col, collect_queries(queries), scorer, k,
+        ascending=False, score_col="cos_sim", op="knn_classify_accuracy")
     votes = nn.groupBy("q_id", "q_label", "c_label").agg(
         F.count(F.lit(1)).alias("n_votes")
     )
@@ -1011,6 +990,61 @@ def pq_codebook(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
+def _collect_codebook(cb: DataFrame, m: int) -> tuple:
+    """(Cm, codes_m, css) of a bounded (m, code, cw) codebook on the
+    driver: per subspace, the codeword matrix in ascending code order,
+    its code ids and its squared row norms (None for an empty one)."""
+    import numpy as np
+
+    rows = sorted(cb.select("m", "code", "cw").collect(),
+                  key=lambda r: (r["m"], r["code"]))
+    Cm = [np.array([list(map(float, r["cw"])) for r in rows
+                    if r["m"] == mi], dtype=np.float64)
+          for mi in range(m)]
+    codes_m = [np.array([r["code"] for r in rows if r["m"] == mi])
+               for mi in range(m)]
+    return Cm, codes_m, [(C * C).sum(axis=1) if len(C) else None
+                         for C in Cm]
+
+
+def nearest_code(S, C, cs):
+    """Per row of ``S``, the position of its nearest codeword in ``C``
+    (squared norms ``cs``) by squared L2 rounded at SCORE_ROUND — the
+    dot-identity form; first-min argmin ties to the lower code."""
+    import numpy as np
+
+    return np.round(
+        (S * S).sum(axis=1)[:, None] - 2.0 * (S @ C.T) + cs[None, :],
+        SCORE_ROUND,
+    ).argmin(axis=1)
+
+
+def _pq_adc(Q, Cm, css, sub: int):
+    """ADC for the queries ``Q``: builds the (m, K, q) lookup table
+    round(l2sq(q_sub, cw)) once — the oracle's per-subspace distance
+    table — and returns ``adc(X)``, the [n, q] distance of each vector's
+    PQ code: its M table lookups summed, re-rounded at SCORE_ROUND."""
+    import numpy as np
+
+    lut = []
+    for mi in range(len(Cm)):
+        QS = Q[:, mi * sub:(mi + 1) * sub]
+        lut.append(np.round(
+            css[mi][:, None] - 2.0 * (Cm[mi] @ QS.T)
+            + (QS * QS).sum(axis=1)[None, :],
+            SCORE_ROUND,
+        ))
+
+    def adc(X):
+        d = np.zeros((len(X), len(Q)))
+        for mi in range(len(Cm)):
+            S = X[:, mi * sub:(mi + 1) * sub]
+            d += lut[mi][nearest_code(S, Cm[mi], css[mi]), :]
+        return np.round(d, SCORE_ROUND)
+
+    return adc
+
+
 def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", dim: int = PQ_DIM,
                    m: int = PQ_M) -> DataFrame:
@@ -1035,14 +1069,7 @@ def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
     from pyspark.sql import types as T
 
     sub = dim // m
-    crows = sorted(cb.select("m", "code", "cw").collect(),
-                   key=lambda r: (r["m"], r["code"]))
-    Cm = [np.array([list(map(float, r["cw"])) for r in crows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
-    codes_m = [np.array([r["code"] for r in crows if r["m"] == mi])
-               for mi in range(m)]
-    css = [(C * C).sum(axis=1) if len(C) else None for C in Cm]
+    Cm, codes_m, css = _collect_codebook(cb, m)
     out_schema = T.StructType([
         T.StructField("vec_id", df.schema[id_col].dataType),
         T.StructField("m", T.IntegerType()),
@@ -1056,17 +1083,12 @@ def pq_encode_with(df: DataFrame, cb: DataFrame, id_col: str = "vec_id",
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            X = as_matrix(pdf[vec_col])
             vids = pdf[id_col].to_numpy()
             frames = []
             for mi in range(m):
-                S = X[:, mi * sub:(mi + 1) * sub]
-                d2 = np.round(
-                    (S * S).sum(axis=1)[:, None]
-                    - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                    SCORE_ROUND,
-                )
-                best = d2.argmin(axis=1)  # first min = lowest code
+                best = nearest_code(X[:, mi * sub:(mi + 1) * sub], Cm[mi],
+                                    css[mi])
                 frames.append(pd.DataFrame({
                     "vec_id": vids,
                     "m": np.full(len(vids), mi, dtype=np.int32),
@@ -1102,92 +1124,28 @@ def pq_topk(emb: DataFrame, k: int, n_queries: int = 10,
     Output: q_id, c_id, adc_dist (ascending = nearer), rank — approximate
     by construction; pq_recall records the quality.
 
-    r14: encode and ADC scoring fuse into ONE Arrow-GEMM scan — the
-    query LUT is built on the driver from the bounded codebook and the
-    bounded query batch (the rows the old plan broadcast), each scan
-    batch encodes its vectors, sums its M LUT lookups (per-subspace d
-    rounded at SCORE_ROUND, then the sum re-rounded — the exact oracle
-    formula) and emits only its LOCAL top-k per query by the global
-    ordering (adc asc, c_id asc), a superset of the global top-k; the
-    unchanged final window ranks Q x k x n_batches candidates. The
-    codes-join-LUT exchange, the (q, c) sum aggregate and the full
-    N x Q window are gone; the corpus streams once, map-only.
+    Encode and ADC scoring fuse into one local_topk_scan: the query LUT
+    is built on the driver from the bounded codebook and query batch,
+    and each scan batch encodes its vectors and sums their M lookups —
+    the corpus streams once, map-only, and never materializes codes.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     sub = dim // m
-    crows = sorted(
-        pq_codebook(emb, id_col, vec_col, dim, m).collect(),
-        key=lambda r: (r["m"], r["code"]),
-    )
-    Cm = [np.array([list(map(float, r["cw"])) for r in crows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
-    css = [(C * C).sum(axis=1) if len(C) else None for C in Cm]
-    qrows = sorted(
+    Cm, _, css = _collect_codebook(
+        pq_codebook(emb, id_col, vec_col, dim, m), m)
+    schema, qpdf = collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
-    )
-    out_schema = T.StructType([
-        T.StructField("q_id", emb.schema[id_col].dataType),
-        T.StructField("c_id", emb.schema[id_col].dataType),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
-    if not qrows or any(len(C) == 0 for C in Cm):
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # (m, K, Q) LUT: round(l2sq(q_sub, cw)) — the oracle's per-
-        # subspace distance table, built once on the driver
-        lut = []
-        for mi in range(m):
-            QS = Qm[:, mi * sub:(mi + 1) * sub]
-            lut.append(np.round(
-                css[mi][:, None] - 2.0 * (Cm[mi] @ QS.T)
-                + (QS * QS).sum(axis=1)[None, :],
-                SCORE_ROUND,
-            ))
+        .select(F.col(id_col).alias("q_id"), vec_col))
+    if any(len(C) == 0 for C in Cm):
+        qpdf = qpdf.iloc[:0]  # an empty codebook subspace encodes nothing
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                adc = np.zeros((len(c_ids), len(q_ids)))
-                for mi in range(m):
-                    S = X[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    adc += lut[mi][d2.argmin(axis=1), :]
-                adc = np.round(adc, SCORE_ROUND)
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    order = np.lexsort((c_ids, adc[:, j]))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(order)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "adc_dist": adc[ci, qi],
-                })
+    def scorer(Q, qpdf):
+        adc = _pq_adc(Q, Cm, css, sub)
+        return lambda X, pdf: (adc(X), None)
 
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return local_topk_scan(
+        emb.select(F.col(id_col).alias("c_id"), vec_col), "c_id", vec_col,
+        (schema, qpdf), scorer, k, ascending=True, score_col="adc_dist",
+        op="pq_topk")
 
 
 def pq_recall(emb: DataFrame, k: int, n_queries: int = 10,
@@ -1349,126 +1307,45 @@ def ivfpq_topk(emb: DataFrame, k: int, n_queries: int = 10,
 
     Output: q_id, c_id, adc_dist, rank (ascending distance).
 
-    r14: the composed probe fuses into ONE Arrow-GEMM scan. Every side
-    table the old plan broadcast is bounded and collects to the driver
-    instead — the ~sqrt(N) centroid sample (probe cells per query are
-    the same top-NPROBE by rounded cosine desc / cent_id asc), the
-    K x M codebook, the query batch (its LUT is built driver-side, the
-    oracle's per-subspace formula verbatim). Each scan batch assigns
-    its vectors (the assign_to_centroids GEMM rule to the bit), encodes
-    them (the pq_encode_with rule), scores candidates whose cell is in
-    a query's probe set, and emits the local top-k per query by the
-    global ordering (adc asc, c_id asc) — a superset of the global
-    top-k, ranked by the unchanged final window over Q x k x n_batches
-    rows. The assignment pass, probe window, candidate join, codes
-    join and (q, c) sum aggregate are gone; the corpus streams once.
+    The composed probe is one local_topk_scan. Every side table is
+    bounded and collects to the driver: the ~sqrt(N) centroid sample,
+    the K x M codebook and the query batch. Each scan batch assigns its
+    vectors (the assign_to_centroids rule), encodes them (the
+    pq_encode_with rule) and keeps, per query, the rows whose cell is
+    among the query's probe cells (probe_cells_per_query).
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     sub = dim // m
     nlist = derive_nlist(emb.count())
-    cent_rows = sorted(
+    CC, cc_ids = collect_centroids(
         emb.where(centroid_pred(id_col, nlist))
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
-        .collect(),
-        key=lambda r: r["cent_id"],
-    )
-    cb_rows = sorted(
-        pq_codebook(emb, id_col, vec_col, dim, m).collect(),
-        key=lambda r: (r["m"], r["code"]),
-    )
-    qrows = sorted(
+        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")))
+    Cm, _, css = _collect_codebook(
+        pq_codebook(emb, id_col, vec_col, dim, m), m)
+    schema, qpdf = collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
-    )
-    out_schema = T.StructType([
-        T.StructField("q_id", emb.schema[id_col].dataType),
-        T.StructField("c_id", emb.schema[id_col].dataType),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
-    Cm = [np.array([list(map(float, r["cw"])) for r in cb_rows
-                    if r["m"] == mi], dtype=np.float64)
-          for mi in range(m)]
-    if not qrows or not cent_rows or any(len(C) == 0 for C in Cm):
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        css = [(C * C).sum(axis=1) for C in Cm]
-        CC = np.array([[float(x) for x in r["cvec"]] for r in cent_rows],
-                      dtype=np.float64)
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
+        .select(F.col(id_col).alias("q_id"), vec_col))
+    if not len(cc_ids) or any(len(C) == 0 for C in Cm):
+        qpdf = qpdf.iloc[:0]  # no cell or code to probe
+
+    def scorer(Q, qpdf):
+        pcells = probe_cells_per_query(Q, CC, cc_ids, NPROBE)
+        adc = _pq_adc(Q, Cm, css, sub)
         ccn = np.sqrt((CC * CC).sum(axis=1))
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # probe cells per query: top-NPROBE by (rounded qsim desc,
-        # cent_id asc) — the old window's ordering on the same rounded
-        # cosine (stable argsort over cid-ascending centroids)
-        qsims = np.round(
-            (Qm @ CC.T)
-            / (np.sqrt((Qm * Qm).sum(axis=1))[:, None] * ccn[None, :]),
-            SCORE_ROUND,
-        )
-        take = min(NPROBE, len(cc_ids))
-        pidx = np.argsort(-qsims, axis=1, kind="stable")[:, :take]
-        probe_cells = [set(cc_ids[pidx[j]].tolist())
-                       for j in range(len(q_ids))]
-        lut = []
-        for mi in range(m):
-            QS = Qm[:, mi * sub:(mi + 1) * sub]
-            lut.append(np.round(
-                css[mi][:, None] - 2.0 * (Cm[mi] @ QS.T)
-                + (QS * QS).sum(axis=1)[None, :],
-                SCORE_ROUND,
-            ))
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                cells = cc_ids[np.round(
-                    (X @ CC.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * ccn[None, :]),
-                    SCORE_ROUND,
-                ).argmax(axis=1)]  # first max = lowest cent_id
-                adc = np.zeros((len(c_ids), len(q_ids)))
-                for mi in range(m):
-                    S = X[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ Cm[mi].T) + css[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    adc += lut[mi][d2.argmin(axis=1), :]
-                adc = np.round(adc, SCORE_ROUND)
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(
-                        np.isin(cells, list(probe_cells[j])))
-                    order = np.lexsort((c_ids[keep], adc[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[ci],
-                    "adc_dist": adc[ci, qi],
-                })
+        def score_batch(X, pdf):
+            # first max = lowest cent_id
+            cells = cc_ids[rounded_cosine(X, CC, ccn).argmax(axis=1)]
+            keep = (cells[:, None, None] == pcells[None, :, :]).any(axis=2)
+            return adc(X), keep
 
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        return score_batch
+
+    return local_topk_scan(
+        emb.select(F.col(id_col).alias("c_id"), vec_col), "c_id", vec_col,
+        (schema, qpdf), scorer, k, ascending=True, score_col="adc_dist",
+        op="ivfpq_topk")
 
 
 def ivfpq_recall(emb: DataFrame, k: int, n_queries: int = 10,
@@ -1626,92 +1503,56 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
     residual LUT (q - centroid, n_q x nprobe x M x K rows — still
     broadcast-bounded), because the query's residual differs per cell.
 
-    Same shape as ivfpq_topk, fused the same way (r14): the bounded
-    sides — the ~sqrt(N) centroid sample, the deterministic PQ_CB_MOD
-    sample whose residuals form the codebook, the query batch with its
-    per-probed-cell residual LUT — collect to the driver (the rows the
-    old plan broadcast), and ONE Arrow-GEMM scan assigns, computes
-    residuals, encodes and ADC-scores each batch, emitting the local
-    top-k per query (a superset of the global top-k, ranked by the
-    unchanged final window). Every distance is rounded at SCORE_ROUND
-    with the same tie rules as the joined form; the deterministic
-    codebook keeps the DuckDB oracle exact.
+    Same shape as ivfpq_topk, one local_topk_scan: the bounded sides —
+    the ~sqrt(N) centroid sample, the deterministic PQ_CB_MOD sample
+    whose residuals form the codebook, the query batch with its
+    per-probed-cell residual LUT — collect to the driver, and each scan
+    batch assigns, computes residuals, encodes and ADC-scores the rows
+    in each query's probe cells. Every distance is rounded at
+    SCORE_ROUND with the same tie rules as the joined form; the
+    deterministic codebook keeps the DuckDB oracle exact.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     sub = dim // m
     nlist = derive_nlist(emb.count())
-    cent_rows = sorted(
+    CC, cc_ids = collect_centroids(
         emb.where(centroid_pred(id_col, nlist))
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
-        .collect(),
-        key=lambda r: r["cent_id"],
-    )
+        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")))
     srows = sorted(
         emb.where(pq_sample_pred(id_col))
         .select(F.col(id_col).alias("sid"), vec_col).collect(),
         key=lambda r: r["sid"],
     )
-    qrows = sorted(
+    schema, qpdf = collect_queries(
         emb.where(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("q_id"), vec_col).collect(),
-        key=lambda r: r["q_id"],
-    )
-    out_schema = T.StructType([
-        T.StructField("q_id", emb.schema[id_col].dataType),
-        T.StructField("c_id", emb.schema[id_col].dataType),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
-    if not qrows or not cent_rows or not srows:
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        CC = np.array([[float(x) for x in r["cvec"]] for r in cent_rows],
-                      dtype=np.float64)
-        cc_ids = np.array([int(r["cent_id"]) for r in cent_rows],
-                          dtype=np.int64)
+        .select(F.col(id_col).alias("q_id"), vec_col))
+    if not len(cc_ids) or not srows:
+        qpdf = qpdf.iloc[:0]  # no cell or code to probe
+
+    def scorer(Q, qpdf):
         ccn = np.sqrt((CC * CC).sum(axis=1))
-        cell_pos = {int(c): i for i, c in enumerate(cc_ids)}
 
         def assign_pos(X):
-            # the assign_to_centroids rule: rounded cosine, first-max
-            # argmax = lowest cent_id
-            return np.round(
-                (X @ CC.T)
-                / (np.sqrt((X * X).sum(axis=1))[:, None] * ccn[None, :]),
-                SCORE_ROUND,
-            ).argmax(axis=1)
+            # the assign_to_centroids rule: first max = lowest cent_id
+            return rounded_cosine(X, CC, ccn).argmax(axis=1)
 
         # residual codebook: residuals of the deterministic sample rows
-        # against THEIR OWN cells (bounded rows, the old broadcast side)
+        # against THEIR OWN cells (a bounded sample)
         Sv = np.array([[float(x) for x in r[1]] for r in srows],
                       dtype=np.float64)
         Rs = Sv - CC[assign_pos(Sv)]
         rcb = [Rs[:, mi * sub:(mi + 1) * sub] for mi in range(m)]
         rss = [(R * R).sum(axis=1) for R in rcb]
-        s_ids = np.array([r[0] for r in srows])
-
-        Qm = np.array([[float(x) for x in r[1]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r[0] for r in qrows])
-        # probe cells per query: top-NPROBE by (rounded qsim desc,
-        # cent_id asc), the old window ordering
-        qsims = np.round(
-            (Qm @ CC.T)
-            / (np.sqrt((Qm * Qm).sum(axis=1))[:, None] * ccn[None, :]),
-            SCORE_ROUND,
-        )
-        take = min(NPROBE, len(cc_ids))
-        pidx = np.argsort(-qsims, axis=1, kind="stable")[:, :take]
-        # per (query, probed cell): the residual LUT over the sample
-        # codebook — round(l2sq(q - cvec, cw)) per subspace, the oracle
-        # formula verbatim
+        # per (query, probed cell position): the residual LUT over the
+        # sample codebook — round(l2sq(q - cvec, cw)) per subspace, the
+        # oracle formula verbatim
+        ppos = np.searchsorted(
+            cc_ids, probe_cells_per_query(Q, CC, cc_ids, NPROBE))
         lut = {}
-        for j in range(len(q_ids)):
-            for p in range(take):
-                cp = int(pidx[j, p])
-                qr = Qm[j] - CC[cp]
+        for j, cps in enumerate(ppos.tolist()):
+            for cp in cps:
+                qr = Q[j] - CC[cp]
                 ent = []
                 for mi in range(m):
                     qs = qr[mi * sub:(mi + 1) * sub]
@@ -1721,60 +1562,29 @@ def ivfpq_residual_topk(emb: DataFrame, k: int, n_queries: int = 10,
                     ))
                 lut[(j, cp)] = ent
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                pos = assign_pos(X)
-                R = X - CC[pos]
-                code_idx = np.empty((len(c_ids), m), dtype=np.int64)
+        def score_batch(X, pdf):
+            pos = assign_pos(X)
+            R = X - CC[pos]
+            codes = np.stack([
+                nearest_code(R[:, mi * sub:(mi + 1) * sub], rcb[mi], rss[mi])
+                for mi in range(m)], axis=1)
+            scores = np.zeros((len(X), len(Q)))
+            keep = np.zeros((len(X), len(Q)), dtype=bool)
+            for (j, cp), ent in lut.items():
+                rows = np.flatnonzero(pos == cp)
+                adc = np.zeros(len(rows))
                 for mi in range(m):
-                    S = R[:, mi * sub:(mi + 1) * sub]
-                    d2 = np.round(
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ rcb[mi].T) + rss[mi][None, :],
-                        SCORE_ROUND,
-                    )
-                    code_idx[:, mi] = d2.argmin(axis=1)  # lowest code
-                qi, ci, dv = [], [], []
-                for j in range(len(q_ids)):
-                    sel_rows, sel_adc = [], []
-                    for p in range(take):
-                        cp = int(pidx[j, p])
-                        rows = np.flatnonzero(pos == cp)
-                        if not len(rows):
-                            continue
-                        ent = lut[(j, cp)]
-                        adc = np.zeros(len(rows))
-                        for mi in range(m):
-                            adc += ent[mi][code_idx[rows, mi]]
-                        sel_rows.append(rows)
-                        sel_adc.append(np.round(adc, SCORE_ROUND))
-                    if not sel_rows:
-                        continue
-                    rows = np.concatenate(sel_rows)
-                    adc = np.concatenate(sel_adc)
-                    order = np.lexsort((c_ids[rows], adc))[:k]
-                    qi.append(np.full(len(order), j, dtype=np.int64))
-                    ci.append(rows[order])
-                    dv.append(adc[order])
-                if not qi:
-                    continue
-                qi = np.concatenate(qi)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "c_id": c_ids[np.concatenate(ci)],
-                    "adc_dist": np.concatenate(dv),
-                })
+                    adc += ent[mi][codes[rows, mi]]
+                scores[rows, j] = np.round(adc, SCORE_ROUND)
+                keep[rows, j] = True
+            return scores, keep
 
-        pairs = emb.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        return score_batch
+
+    return local_topk_scan(
+        emb.select(F.col(id_col).alias("c_id"), vec_col), "c_id", vec_col,
+        (schema, qpdf), scorer, k, ascending=True, score_col="adc_dist",
+        op="ivfpq_residual_topk")
 
 
 def dd_ivfpq_residual_topk_sql(k: int, n_queries: int = 10,
@@ -2288,85 +2098,29 @@ def hard_negatives(emb: DataFrame, k: int, n_queries: int,
     gradient). The standard pair-mining pass of every embedding-training
     pipeline (in-batch negatives' offline counterpart).
 
-    Scale shape: identical to knn_join — the bounded query set is
-    broadcast, the corpus streams once, the label filter lands BEFORE
-    the rank window so per-query state stays k rows. Self-pairs are
-    excluded by the label inequality itself.
+    Scale shape: identical to knn_join, with keep mask c_label !=
+    q_label in the scan, so per-query state stays k rows. Self-pairs
+    are excluded by the label inequality itself.
 
     Output: q_id, q_label, c_id, c_label, cos_sim, rank.
-
-    r14: one Arrow-GEMM pass (the knn_join / knn_classify shape) with
-    the bounded query set collected to the driver — each scan batch
-    drops same-label candidates, then emits its LOCAL top-k per query
-    by the exact global ordering (rounded sim desc, c_id asc), a
-    superset of the global top-k; the unchanged final window ranks
-    Q x k x n_batches candidate rows instead of the filtered N x Q
-    pair set.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     queries = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         F.col(label_col).alias("q_label"),
     )
-    out_schema = T.StructType([
-        T.StructField("q_id", emb.schema[id_col].dataType),
-        T.StructField("q_label", emb.schema[label_col].dataType),
-        T.StructField("c_id", emb.schema[id_col].dataType),
-        T.StructField("c_label", emb.schema[label_col].dataType),
-        T.StructField("cos_sim", T.DoubleType()),
-    ])
-    qrows = sorted(queries.collect(), key=lambda r: r["q_id"])
-    if not qrows:
-        pairs = emb.sparkSession.createDataFrame([], out_schema)
-    else:
-        Qm = np.array([[float(x) for x in r["q_vec"]] for r in qrows],
-                      dtype=np.float64)
-        q_ids = np.array([r["q_id"] for r in qrows])
-        q_labels = np.array([r["q_label"] for r in qrows])
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
 
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                c_ids = pdf[id_col].to_numpy()
-                c_labels = pdf[label_col].to_numpy()
-                sims = np.round(
-                    (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi, ci = [], []
-                for j in range(len(q_ids)):
-                    keep = np.flatnonzero(c_labels != q_labels[j])
-                    order = np.lexsort(
-                        (c_ids[keep], -sims[keep, j]))[:k]
-                    sel = keep[order]
-                    qi.append(np.full(len(sel), j, dtype=np.int64))
-                    ci.append(sel)
-                qi = np.concatenate(qi)
-                ci = np.concatenate(ci)
-                yield pd.DataFrame({
-                    "q_id": q_ids[qi],
-                    "q_label": q_labels[qi],
-                    "c_id": c_ids[ci],
-                    "c_label": c_labels[ci],
-                    "cos_sim": sims[ci, qi],
-                })
+    def scorer(Q, qpdf):
+        q_labels = qpdf["q_label"].to_numpy()
+        return lambda X, pdf: (
+            rounded_cosine(X, Q),
+            pdf["c_label"].to_numpy()[:, None] != q_labels[None, :])
 
-        pairs = emb.select(id_col, vec_col, label_col).mapInPandas(
-            fn, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return local_topk_scan(
+        emb.select(F.col(id_col).alias("c_id"), vec_col,
+                   F.col(label_col).alias("c_label")),
+        "c_id", vec_col, collect_queries(queries), scorer, k,
+        ascending=False, score_col="cos_sim", op="hard_negatives")
 
 
 def dd_hard_negatives_sql(k: int, n_queries: int,

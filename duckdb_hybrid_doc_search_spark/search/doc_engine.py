@@ -18,7 +18,8 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..config import SCORE_ROUND, SCORE_THRESHOLD, TOP_K_DEFAULT
+from ..config import (FUSION_WEIGHT_SINGLE, SCORE_ROUND, SCORE_THRESHOLD,
+                      TOP_K_DEFAULT)
 from ..functions.fusion import fuse_scores
 from ..functions.vector import cosine_distance, lit_vector
 from ..models.embedder import hash_embed_text
@@ -139,8 +140,9 @@ class DocSearchEngine:
         """Bulk search: ALL queries scored in one pair of Spark plans.
 
         FTS side = one batched postings probe (operators/bm25.bm25_batch_topk
-        structure over the persisted index); VSS side = one broadcast
-        knn_join of the query-vector batch against the embeddings table.
+        structure over the persisted index); VSS side = a crossJoin of the
+        embeddings table with the broadcast query-vector batch, the cosine
+        distance per pair, and a per-query top-k window.
         The reference answers a batch by looping its per-query probe; here
         per-query marginal cost is ~zero once the scan is paid — the shape
         that matters when re-ranking training corpora against thousands of
@@ -257,7 +259,8 @@ class DocSearchEngine:
                     round_half_up((f + v) / 2.0, SCORE_ROUND)
                     if f is not None and v is not None
                     else round_half_up(
-                        (f if f is not None else v) * 0.8, SCORE_ROUND
+                        (f if f is not None else v) * FUSION_WEIGHT_SINGLE,
+                        SCORE_ROUND,
                     )
                 )
                 rows.append(

@@ -30,7 +30,8 @@ from ..models.reranker import dd_overlap_rerank, overlap_rerank_expr
 from ..models.tokenizer import tokenize_query
 from ..operators.bm25 import (bm25_scores, build_fts_index,
                               dd_bm25_scored_cte, dd_fts_index_ctes)
-from ..operators.knn import cosine_distance_topk, dd_vss_scored_cte
+from ..operators.knn import (cosine_distance_topk, dd_vss_scored_cte,
+                              local_topk_scan)
 
 DISPLAY_COLS = ["lang", "source"]
 
@@ -308,7 +309,7 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
     search_batch, whose per-query rerank forces collects): the FTS
     side is one term-pruned postings probe scoring every query
     (operators/bm25.bm25_batch_topk_from_index), the VSS side one
-    broadcast of the query-vector batch against the embeddings scan,
+    local_topk_scan of the query-vector batch over the embeddings,
     fusion a composite-key full-outer join, fetch one broadcast join
     against documents, and the per-query threshold + top-k a single
     window. Per-query results equal hybrid_search(query) exactly (same
@@ -319,70 +320,40 @@ def hybrid_search_batch(docs: DataFrame, embeddings: DataFrame,
 
     Output: query_id, doc_id, score, fts_score, vss_score + display
     columns, <= top_k rows per query."""
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import Window
+    from pyspark.sql import types as T
 
     from ..operators.bm25 import bm25_batch_topk_from_index
 
-    spark = docs.sparkSession
     if index is None:
         index = build_fts_index(docs)
     fts = bm25_batch_topk_from_index(index, queries, top_k).select(
         "query_id", "doc_id", F.col("score").alias("fts_score")
     )
-    # r15: the VSS side is one Arrow-GEMM scan (the knn_join pattern) —
-    # the pre-r15 crossJoin evaluated the interpreted HOF cosine per
-    # (embedding, query) pair and window-sorted ALL pairs; each scan
-    # batch now emits only its LOCAL top-k per query by the exact global
-    # ordering (rounded distance asc, doc_id asc) — a superset of the
-    # global top-k, so the unchanged window selects identical rows.
-    # Double-precision query vectors, np.round at SCORE_ROUND: the
-    # pinned GEMM convention, verified value-identical across oracles.
-    import numpy as np
-    import pandas as pd
-
-    qv = [hash_embed_text(q) for q in queries]
-    if qv:
-        Qm = np.array(qv, dtype=np.float64)
-        qnorm = np.sqrt((Qm * Qm).sum(axis=1))
-
-        def vss_fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                ids = pdf["vec_id"].to_numpy()
-                dist = np.round(
-                    1.0
-                    - (X @ Qm.T)
-                    / (np.sqrt((X * X).sum(axis=1))[:, None]
-                       * qnorm[None, :]),
-                    SCORE_ROUND,
-                )
-                qi_out, ci_out = [], []
-                for j in range(len(qv)):
-                    order = np.lexsort((ids, dist[:, j]))[:top_k]
-                    qi_out.append(np.full(len(order), j, dtype=np.int32))
-                    ci_out.append(order)
-                qi_out = np.concatenate(qi_out)
-                ci_out = np.concatenate(ci_out)
-                yield pd.DataFrame({
-                    "query_id": qi_out,
-                    "doc_id": ids[ci_out],
-                    "vss_score": dist[ci_out, qi_out],
-                })
-
-        pair = embeddings.select("vec_id", "embedding").mapInPandas(
-            vss_fn, "query_id int, doc_id long, vss_score double")
-    else:
-        pair = spark.createDataFrame(
-            [], "query_id int, doc_id long, vss_score double")
-    wv = Window.partitionBy("query_id").orderBy(
-        F.asc("vss_score"), F.asc("doc_id"))
-    vss = (
-        pair.withColumn("rn", F.row_number().over(wv))
-        .where(F.col("rn") <= top_k)
-        .select("query_id", "doc_id", "vss_score")
+    # VSS: rounded cosine distance with double-precision query vectors,
+    # as the single path binds them
+    qside = (
+        T.StructType([T.StructField("query_id", T.IntegerType()),
+                      T.StructField("q_vec", T.ArrayType(T.DoubleType()))]),
+        pd.DataFrame({"query_id": range(len(queries)),
+                      "q_vec": [hash_embed_text(q) for q in queries]}),
     )
+
+    def scorer(Q, qpdf):
+        qnorm = np.sqrt((Q * Q).sum(axis=1))
+        return lambda X, pdf: (np.round(
+            1.0 - (X @ Q.T)
+            / (np.sqrt((X * X).sum(axis=1))[:, None] * qnorm[None, :]),
+            SCORE_ROUND,
+        ), None)
+
+    vss = local_topk_scan(
+        embeddings.select(F.col("vec_id").alias("doc_id"), "embedding"),
+        "doc_id", "embedding", qside, scorer, top_k, ascending=True,
+        score_col="vss_score", op="hybrid_search_batch",
+    ).select("query_id", "doc_id", "vss_score")
     fused = fts.join(vss, ["query_id", "doc_id"], "full_outer").withColumn(
         "score",
         F.round(fuse_scores(F.col("fts_score"), F.col("vss_score")),
